@@ -14,10 +14,13 @@ partitions sized to cores locally but expected to be overridden to
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 #: Runtime-settable confs the engine relies on. Applied via ``tune``.
 RUNTIME_CONFS: dict[str, str] = {
@@ -39,25 +42,32 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime configuration to an existing session."""
-    for key, value in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # Non-settable in this deployment — keep going; each conf
-            # has a safe-degraded behavior except nanosAsLong, which
-            # sources.catalog works around per-read anyway.
-            pass
+    """Apply the engine's runtime configuration to an existing session.
+
+    A conf this deployment refuses is skipped with one warning naming
+    it: each has a safe degraded behaviour except nanosAsLong, which
+    sources.catalog works around per read anyway."""
+    confs = dict(RUNTIME_CONFS)
     try:
         # Right-size shuffle partitions when still at the stock default:
         # AQE coalesces batch shuffles anyway, but stateful streaming
         # disables AQE and would otherwise run 200 state partitions on
         # a laptop-sized deployment. A real cluster overrides this.
         if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           str(spark.sparkContext.defaultParallelism))
-    except Exception:
-        pass
+            confs["spark.sql.shuffle.partitions"] = str(
+                spark.sparkContext.defaultParallelism)
+    except Exception as e:
+        log.warning("session.tune could not read "
+                    "spark.sql.shuffle.partitions (%s)", type(e).__name__)
+    failed = []
+    for key, value in confs.items():
+        try:
+            spark.conf.set(key, value)
+        except Exception as e:
+            failed.append(f"{key}={value} ({type(e).__name__})")
+    if failed:
+        log.warning("session.tune could not set %d conf(s): %s",
+                    len(failed), "; ".join(failed))
     return spark
 
 

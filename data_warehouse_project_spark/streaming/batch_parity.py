@@ -92,8 +92,11 @@ def session_islands(rows: DataFrame, seq_col: str = "session_seq") -> DataFrame:
             "new_session",
             F.when(
                 F.col("prev_ts").isNull()
-                | (F.unix_timestamp("ts") - F.unix_timestamp("prev_ts")
-                   > SESSION_GAP_S),
+                # microsecond-exact, like the oracle's fractional
+                # epoch() difference (unix_timestamp truncates to
+                # whole seconds)
+                | (F.col("ts") > F.col("prev_ts")
+                   + F.expr(f"INTERVAL {SESSION_GAP_S} SECONDS")),
                 1,
             ).otherwise(0),
         )

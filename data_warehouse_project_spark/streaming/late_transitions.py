@@ -40,12 +40,18 @@ the lateness window) — the lateness window is the price of disorder
 tolerance, and it is exactly the state Structured Streaming's own
 watermarked operators keep.
 
-Scale: per fold — one bounded scalar read (the 'w' row), one
-user-keyed window over (buffer-for-batch-users ∪ admitted batch),
-a (type × type) delta aggregate, and a count merge. Users untouched
-by the batch pass through the immutable union unchanged (the same
-O(batch) discipline as sessions.py's semi-join). History is never
-rescanned.
+Scale: per fold — one bounded scalar read (the 'w' row, merged with
+the batch's max-ts into one collect) and one state write that shuffles
+the rows once. A single user-keyed window over (buffer ∪ admitted
+batch) yields both the finalized pairs and the new buffer, and the
+write's count and buffer branches share its exchange; one (type ×
+type) aggregate sums the prior counts with the new pairs. The buffer
+holds only the lateness window plus one anchor per user, so a fold
+reads O(buffer + batch) rows and history is never rescanned. Serving
+is one window over the buffer, one aggregate over counts ∪ tail pairs,
+and the share's total as a window over that small aggregate. On
+tests/test_streaming.py's budget input, a merge fold runs 9 Spark jobs
+(3 of them in the state write) and a served report 4.
 """
 
 from __future__ import annotations
@@ -105,28 +111,41 @@ def _assemble(counts: DataFrame, buffer: DataFrame,
     return c.unionByName(b).unionByName(w)
 
 
+def _pairs(seq: DataFrame) -> DataFrame:
+    """Consecutive (prev_type → event_type) pairs as ``n = 1`` rows,
+    ready to be summed with finalized counts in one aggregate."""
+    return seq.filter(F.col("prev_type").isNotNull()).select(
+        "prev_type", F.col("event_type").alias("next_type"),
+        F.lit(1).cast("long").alias("n"))
+
+
+def _sum_counts(counts: DataFrame) -> DataFrame:
+    return (counts.groupBy("prev_type", "next_type")
+            .agg(F.sum("n").cast("long").alias("n")))
+
+
 def _tail_split(events: DataFrame, horizon) -> tuple[DataFrame, DataFrame]:
-    """(finalized-pair deltas, new buffer) from per-user sorted events:
-    finalize consecutive pairs whose later endpoint is ≤ horizon; keep
-    everything above the horizon plus one anchor per user (the latest
-    event ≤ horizon)."""
+    """(finalized pairs as ``n = 1`` rows, new buffer) from ONE
+    user-keyed window over the events sorted by (ts, event_id).
+
+    A pair is finalized when its later endpoint is ≤ horizon. The
+    buffer keeps every event above the horizon plus one anchor per
+    user: the event ≤ horizon whose ``lead(ts)`` is NULL or above the
+    horizon, i.e. the latest event at or below it. Pairs and buffer
+    both read the same window, so the plan has one exchange on
+    user_id, which the state write's two branches share (Spark's
+    exchange reuse). NULL-ts rows sort first: they can head a pair
+    but are neither finalized endpoints nor buffered."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = events.withColumn("prev_type2", F.lag("event_type").over(w))
-    delta = (seq.filter(F.col("prev_type2").isNotNull()
-                        & (F.col("ts") <= F.lit(horizon)))
-             .groupBy(F.col("prev_type2").alias("prev_type"),
-                      F.col("event_type").alias("next_type"))
-             .agg(F.count("*").cast("long").alias("n")))
-    anchor = (events.filter(F.col("ts") <= F.lit(horizon))
-              .groupBy("user_id")
-              .agg(F.max_by(
-                  F.struct("ts", "event_id", "event_type"),
-                  F.struct("ts", "event_id")).alias("s"))
-              .select("user_id", "s.ts", "s.event_id", "s.event_type"))
-    buffer = (events.filter(F.col("ts") > F.lit(horizon))
-              .select("user_id", "ts", "event_id", "event_type")
-              .unionByName(anchor))
-    return delta, buffer
+    below = F.col("ts") <= F.lit(horizon)
+    seq = (events.withColumn("prev_type", F.lag("event_type").over(w))
+           .withColumn("next_ts", F.lead("ts").over(w)))
+    pairs = _pairs(seq.filter(below))
+    anchor = below & (F.col("next_ts").isNull()
+                      | (F.col("next_ts") > F.lit(horizon)))
+    buffer = (seq.filter((F.col("ts") > F.lit(horizon)) | anchor)
+              .select("user_id", "ts", "event_id", "event_type"))
+    return pairs, buffer
 
 
 def late_transitions_state(events: DataFrame) -> DataFrame:
@@ -146,8 +165,8 @@ def late_transitions_state(events: DataFrame) -> DataFrame:
             None, 0, spark)
     import datetime as dt
     horizon = wm - dt.timedelta(seconds=LATENESS_S)
-    delta, buffer = _tail_split(ev, horizon)
-    return _assemble(delta, buffer, wm, 0, spark)
+    pairs, buffer = _tail_split(ev, horizon)
+    return _assemble(_sum_counts(pairs), buffer, wm, 0, spark)
 
 
 def merge_late_transitions_state(prev: DataFrame,
@@ -163,27 +182,20 @@ def merge_late_transitions_state(prev: DataFrame,
     if wm_new is None:           # still no events anywhere
         return prev
 
+    # one window over every buffered user plus the admitted batch:
+    # _tail_split works per user, and a buffered user absent from the
+    # batch still needs its window, as its pairs may fall below the
+    # advancing horizon with no new events
     buffer_prev = (prev.filter(F.col("kind") == "b")
                    .select("user_id", "ts", "event_id", "event_type"))
-    batch_users = admitted.select("user_id").distinct()
-    touched = buffer_prev.join(batch_users, "user_id", "left_semi")
-    untouched = buffer_prev.join(batch_users, "user_id", "left_anti")
-
-    # untouched users still move below the advancing horizon: their
-    # buffered pairs may finalize this fold even with no new events
-    delta_t, buffer_t = _tail_split(
-        touched.unionByName(admitted.select("user_id", "ts", "event_id",
-                                            "event_type")),
+    pairs, buffer = _tail_split(
+        buffer_prev.unionByName(admitted.select(
+            "user_id", "ts", "event_id", "event_type")),
         horizon_new)
-    delta_u, buffer_u = _tail_split(untouched, horizon_new)
-
-    counts = (prev.filter(F.col("kind") == "c")
-              .select("prev_type", "next_type", "n")
-              .unionByName(delta_t).unionByName(delta_u)
-              .groupBy("prev_type", "next_type")
-              .agg(F.sum("n").cast("long").alias("n")))
-    return _assemble(counts, buffer_t.unionByName(buffer_u),
-                     wm_new, dropped + n_late, spark)
+    counts = _sum_counts(prev.filter(F.col("kind") == "c")
+                         .select("prev_type", "next_type", "n")
+                         .unionByName(pairs))
+    return _assemble(counts, buffer, wm_new, dropped + n_late, spark)
 
 
 def state_to_report(state: DataFrame) -> DataFrame:
@@ -191,24 +203,19 @@ def state_to_report(state: DataFrame) -> DataFrame:
     buffered tail's transitions (anchor → first unfinalized pair
     included — it was deliberately NOT finalized)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tail = (state.filter(F.col("kind") == "b")
-            .select("user_id", "ts", "event_id", "event_type")
-            .withColumn("prev_type2", F.lag("event_type").over(w))
-            .filter(F.col("prev_type2").isNotNull())
-            .groupBy(F.col("prev_type2").alias("prev_type"),
-                     F.col("event_type").alias("next_type"))
-            .agg(F.count("*").cast("long").alias("n")))
-    trans = (state.filter(F.col("kind") == "c")
-             .select("prev_type", "next_type", "n")
-             .unionByName(tail)
-             .groupBy("prev_type", "next_type")
-             .agg(F.sum("n").cast("long").alias("n")))
-    total = trans.agg(F.sum("n").alias("total"))
+    tail = _pairs(state.filter(F.col("kind") == "b")
+                  .withColumn("prev_type", F.lag("event_type").over(w)))
+    trans = _sum_counts(state.filter(F.col("kind") == "c")
+                        .select("prev_type", "next_type", "n")
+                        .unionByName(tail))
     from ..functions.compat import fround
+    # the share's total is a window over the whole (type × type)
+    # aggregate, small enough for one partition: no second job
     return (
-        trans.join(F.broadcast(total))
-        .select("prev_type", "next_type", F.col("n").cast("long").alias("n"),
-                fround(F.col("n") / F.col("total"), 6).alias("share"))
+        trans.coalesce(1)
+        .select("prev_type", "next_type", "n",
+                fround(F.col("n") / F.sum("n").over(Window.partitionBy()),
+                       6).alias("share"))
         .orderBy(F.col("n").desc(), "prev_type", "next_type")
         .limit(TRANSITION_TOP_K)
     )

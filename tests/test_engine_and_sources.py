@@ -162,6 +162,28 @@ def test_cache_release_frees_all_storage(spark, sf_dir):
         assert n_cached() == 0         # and fully released
 
 
+def test_tune_warns_naming_each_conf_it_cannot_set(spark, monkeypatch,
+                                                   caplog):
+    """session.tune skips a conf the session refuses (a static conf
+    cannot change at runtime) but says so: one warning names it, and
+    the settable confs are still applied."""
+    import logging
+
+    from data_warehouse_project_spark import session
+
+    monkeypatch.setattr(session, "RUNTIME_CONFS", {
+        "spark.sql.extensions": "com.example.NoSuchExtension",
+        "spark.sql.session.timeZone": "UTC"})
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        assert session.tune(spark) is spark
+    warned = [r.getMessage() for r in caplog.records
+              if r.name == session.__name__]
+    assert len(warned) == 1, warned
+    assert "spark.sql.extensions=com.example.NoSuchExtension" in warned[0]
+    assert "spark.sql.session.timeZone" not in warned[0]
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
 def test_load_table_missing_ts_column_raises_clear_error(
         spark, sf_dir, tmp_path):
     """ADVICE r6 / VERDICT r6 #5: a parquet file that drops a

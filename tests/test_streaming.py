@@ -102,6 +102,36 @@ def test_session_parity(spark, sf_dir, events_stream, tmp_path_factory):
     assert stream_rows == batch_rows
 
 
+def test_session_islands_fractional_gap_matches_oracle(spark):
+    """Two events 1,800.05 s apart: their whole-second difference is
+    1,800, but the oracle's fractional epoch() difference exceeds
+    SESSION_GAP_S and starts a new session, so the engine must too.
+    A gap of exactly 1,800 s stays one session on both sides."""
+    import datetime as dt
+
+    import duckdb
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0, 500_000)
+    rows = [(1, 1, t0, 1.0),
+            (1, 2, t0 + dt.timedelta(seconds=1800.05), 1.0),
+            (2, 3, t0, 1.0),
+            (2, 4, t0 + dt.timedelta(seconds=1800), 1.0)]
+    events = spark.createDataFrame(
+        rows, "user_id long, event_id long, ts timestamp, value double")
+    got = {(r["user_id"], r["event_id"]): r["session_seq"]
+           for r in batch_parity.session_islands(events).collect()}
+    want = {(1, 1): 1, (1, 2): 2, (2, 3): 1, (2, 4): 1}
+    assert got == want
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events (user_id BIGINT, event_id BIGINT,"
+                " ts TIMESTAMP, value DOUBLE)")
+    con.executemany("INSERT INTO events VALUES (?, ?, ?, ?)", rows)
+    oracle = con.execute(batch_parity.EVENTS_SESSIONIZE_SQL).fetchall()
+    assert sorted((u, n) for u, _, _, _, n, _ in oracle) == [
+        (1, 1), (1, 1), (2, 2)]
+
+
 def test_dedup_parity_on_keys(spark, sf_dir, events_stream, tmp_path_factory):
     """dropDuplicates keeps the first *arrival* (nondeterministic on
     ties within a batch) — parity is asserted on the key set and
@@ -1298,6 +1328,85 @@ def test_late_transitions_maintainer_restart_with_disorder(spark, tmp_path):
     assert again == got
 
 
+def test_late_transitions_single_window_edge_cases(spark):
+    """Three batches through one window per fold (LATENESS 6 h), with
+    the state and report after each batch pinned row for row:
+
+    - user 1 is buffered but absent from batches 1 and 2; its pending
+      b→c pair falls below the advancing horizon in batch 1 and must
+      be finalized exactly once (its batch-2 event at exactly the old
+      horizon is dropped, so it stays absent);
+    - user 3's q and p share ts 09:00, which is exactly the horizon
+      after batch 1: they order by event_id (30 before 31), q→p is
+      finalized and p, the later of the tie, is the anchor;
+    - user 2's NULL-ts row in batch 0 sorts first: it heads the x→a
+      pair but is neither finalized nor buffered itself."""
+    import datetime as dt
+
+    from data_warehouse_project_spark.streaming import late_transitions as L
+
+    schema = "user_id long, event_id long, ts timestamp, event_type string"
+
+    def h(hour):
+        return None if hour is None else dt.datetime(2024, 1, 1, hour)
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(u, e, h(t), et) for u, e, t, et in rows], schema)
+
+    def state_rows(state):
+        counts = sorted((r["prev_type"], r["next_type"], r["n"])
+                        for r in state.filter(F.col("kind") == "c").collect())
+        buffer = sorted((r["user_id"], r["ts"], r["event_id"],
+                         r["event_type"])
+                        for r in state.filter(F.col("kind") == "b").collect())
+        (w,) = state.filter(F.col("kind") == "w").collect()
+        return counts, buffer, w["wm"], w["dropped"]
+
+    def report(state):
+        return [(r["prev_type"], r["next_type"], r["n"], r["share"])
+                for r in L.state_to_report(state).collect()]
+
+    s0 = L.late_transitions_state(batch([
+        (1, 10, 0, "a"), (1, 11, 2, "b"), (1, 12, 8, "c"),
+        (2, 20, None, "x"), (2, 21, 1, "a"),
+        (3, 33, 10, "s")])).localCheckpoint()
+    assert state_rows(s0) == (
+        [("a", "b", 1), ("x", "a", 1)],
+        [(1, h(2), 11, "b"), (1, h(8), 12, "c"), (2, h(1), 21, "a"),
+         (3, h(10), 33, "s")],
+        h(10), 0)
+    assert report(s0) == [("a", "b", 1, 0.333333), ("b", "c", 1, 0.333333),
+                          ("x", "a", 1, 0.333333)]
+
+    s1 = L.merge_late_transitions_state(s0, batch([
+        (3, 31, 9, "p"), (3, 30, 9, "q"), (3, 32, 15, "r")])
+    ).localCheckpoint()
+    assert state_rows(s1) == (
+        [("a", "b", 1), ("b", "c", 1), ("q", "p", 1), ("x", "a", 1)],
+        [(1, h(8), 12, "c"), (2, h(1), 21, "a"), (3, h(9), 31, "p"),
+         (3, h(10), 33, "s"), (3, h(15), 32, "r")],
+        h(15), 0)
+    assert report(s1) == [
+        ("a", "b", 1, 0.166667), ("b", "c", 1, 0.166667),
+        ("p", "s", 1, 0.166667), ("q", "p", 1, 0.166667),
+        ("s", "r", 1, 0.166667), ("x", "a", 1, 0.166667)]
+
+    s2 = L.merge_late_transitions_state(s1, batch([
+        (1, 13, 9, "d"), (2, 22, 16, "b"), (4, 40, 21, "z")])
+    ).localCheckpoint()
+    assert state_rows(s2) == (
+        [("a", "b", 1), ("b", "c", 1), ("p", "s", 1), ("q", "p", 1),
+         ("s", "r", 1), ("x", "a", 1)],
+        [(1, h(8), 12, "c"), (2, h(1), 21, "a"), (2, h(16), 22, "b"),
+         (3, h(15), 32, "r"), (4, h(21), 40, "z")],
+        h(21), 1)
+    assert report(s2) == [
+        ("a", "b", 2, 0.285714), ("b", "c", 1, 0.142857),
+        ("p", "s", 1, 0.142857), ("q", "p", 1, 0.142857),
+        ("s", "r", 1, 0.142857), ("x", "a", 1, 0.142857)]
+
+
 # ---------------------------------------------------------------------------
 # allowed-lateness sessionizer (streaming/late_sessions.py)
 # ---------------------------------------------------------------------------
@@ -1813,6 +1922,22 @@ def test_mg_streaming_maintainer_restart(spark, tmp_path):
     assert real == {"alpha": 3, "beta": 3, "gamma": 1}
 
 
+def _spark_jobs(spark, group: str, fn) -> int:
+    """Run ``fn`` under job group ``group`` and count the Spark jobs
+    the status store attributes to it."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # the status store is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_late_fold_driver_action_budget(spark, tmp_path, monkeypatch):
     """Plan-pin (VERDICT r7 #7): one MERGE fold of each late-tolerant
     maintainer performs at most 4 driver actions — the batch-id
@@ -1821,7 +1946,13 @@ def test_late_fold_driver_action_budget(spark, tmp_path, monkeypatch):
     action-count bound, so a refactor that silently adds per-batch
     round-trips is the one regression class the wall-time standings
     would mask; this budget catches it. Counts every action class:
-    collect / count / toPandas / localCheckpoint / writer save."""
+    collect / count / toPandas / localCheckpoint / writer save.
+
+    The Spark jobs behind those actions are budgeted too, for
+    late_transitions: on this input a merge fold runs 9 (3 of them in
+    the state write: one shuffle on user_id, one on the type pair) and
+    serving its report 4. A plan that shuffles the same rows once per
+    operator again exceeds both."""
     import datetime as dt
 
     import pyspark.sql as psql
@@ -1870,8 +2001,21 @@ def test_late_fold_driver_action_budget(spark, tmp_path, monkeypatch):
         assert mod.fold_batch_into_state(b0, 0, state) is True
         assert actions["n"] <= 3, (mod.__name__, "init", actions["n"])
         actions["n"] = 0
-        assert mod.fold_batch_into_state(b1, 1, state) is True
+        if mod is T:
+            jobs = _spark_jobs(spark, "late_transitions.merge",
+                               lambda: mod.fold_batch_into_state(b1, 1, state))
+            assert jobs <= 9, ("merge fold Spark jobs", jobs)
+        else:
+            assert mod.fold_batch_into_state(b1, 1, state) is True
         assert actions["n"] <= 4, (mod.__name__, "merge", actions["n"])
+        if mod is T:
+            rows = []
+            jobs = _spark_jobs(spark, "late_transitions.report", lambda:
+                               rows.extend(T.state_to_report(
+                                   spark.read.parquet(state)).collect()))
+            assert jobs <= 4, ("report Spark jobs", jobs)
+            assert {(r["prev_type"], r["next_type"]): r["n"]
+                    for r in rows} == {("a", "b"): 1, ("b", "c"): 1}
 
 
 # ---------------------------------------------------------------------------
