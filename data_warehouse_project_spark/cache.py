@@ -31,7 +31,11 @@ rounds) are not tracked — their refs die inside the query function.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 #: live intra-query persisted frames
 _PINNED: list[DataFrame] = []
@@ -57,11 +61,15 @@ def track_ckpt(df: DataFrame) -> DataFrame:
 
 
 def release_all(blocking: bool = True) -> int:
-    """Unpersist every tracked frame (call AFTER materializing the
-    query result — an unpersisted plan re-computes if re-executed).
-    Returns the number of frames released."""
+    """Unpersist every pinned frame and drop every tracked checkpoint
+    ref (call AFTER materializing the query result — an unpersisted
+    plan re-computes if re-executed; checkpoint blocks are left to the
+    ContextCleaner, see the scope note). Returns the number of pins
+    unpersisted and logs both counts."""
     n = len(_PINNED)
     while _PINNED:
         _PINNED.pop().unpersist(blocking=blocking)
+    log.info("cache.release_all: unpersisted %d pin(s), dropped %d "
+             "checkpoint ref(s)", n, len(_CKPTS))
     _CKPTS.clear()
     return n

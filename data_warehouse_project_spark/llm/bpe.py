@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
-from ..sources.catalog import Catalog
+from ..sources.catalog import Catalog, local_rows
 
 #: number of merge rules to learn
 N_MERGES = 8
@@ -89,8 +89,8 @@ def apply_merge(state: DataFrame, left: str, right: str) -> DataFrame:
     rule attaches as a broadcast one-row frame (never spliced into a
     SQL literal — corpus symbols may contain quotes/backslashes)."""
     spark = state.sparkSession
-    rule = spark.createDataFrame(
-        [(left, right, left + right)], "mlft string, mrgt string, mcat string")
+    rule = local_rows(spark, [(left, right, left + right)],
+                      "mlft string, mrgt string, mcat string")
     merged = F.expr(
         "aggregate(symbols, cast(array() as array<string>), "
         "(acc, s) -> IF(size(acc) > 0 AND element_at(acc, -1) = mlft "
@@ -131,7 +131,8 @@ def learn_merges(docs: DataFrame, n_merges: int = N_MERGES,
 def bpe_merge_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query (rows-only): the learned merge table."""
     rules = learn_merges(Catalog(spark, sf_dir).documents)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(r["step"], r["left"], r["right"], r["pair_count"])
          for r in rules],
         "step long, left string, right string, pair_count long")
@@ -232,8 +233,8 @@ def bpe_merge_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     match = as_tuples(rules) == as_tuples(ref)
     noninc = all(rules[i]["pair_count"] >= rules[i + 1]["pair_count"]
                  for i in range(len(rules) - 1))
-    return spark.createDataFrame(
-        [(len(rules), match, noninc)],
+    return local_rows(
+        spark, [(len(rules), match, noninc)],
         "n_rules long, rules_match_reference boolean,"
         " counts_nonincreasing boolean")
 
@@ -410,8 +411,8 @@ def bpe_encode_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip = all("".join(s) == w + EOW for w, s in got.items())
     any_merged = any(len(t) > 1 and t != EOW
                      for s in got.values() for t in s)
-    return spark.createDataFrame(
-        [(len(got), matches, roundtrip, any_merged)],
+    return local_rows(
+        spark, [(len(got), matches, roundtrip, any_merged)],
         "n_words long, encode_matches_reference boolean,"
         " roundtrip_ok boolean, has_merged_token boolean")
 

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import fround, sql_fround
 from ..registry import register
-from ..sources.catalog import Catalog
+from ..sources.catalog import Catalog, local_rows
 
 #: terms the Zipf OLS fit runs over (bounded window cardinality)
 ZIPF_TOP_K = 200
@@ -459,8 +459,8 @@ def embedding_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov = embedding_covariance_matrix(spark, sf_dir)
     rows = [r.asDict() for r in cov.collect()]
     report = pca_variance_report(rows)
-    return spark.createDataFrame(
-        report,
+    return local_rows(
+        spark, report,
         "component long, eigenvalue double, var_share double, "
         "cum_share double")
 
@@ -553,8 +553,8 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the scan."""
     means, comps, _ = pca_basis(spark, sf_dir)
     if not comps:
-        return spark.createDataFrame(
-            [], "vec_id long, " +
+        return local_rows(
+            spark, [], "vec_id long, " +
                 ", ".join(f"pc{k + 1} double"
                           for k in range(PCA_TOP_K)) +
                 ", recon_err_sq double")
@@ -593,8 +593,8 @@ def pca_projection_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no corpus, no evidence: NULL verdicts (the pinned-constant
         # oracle presumes a non-empty corpus; see the empty-input
         # gate's documented-divergence list)
-        return spark.createDataFrame(
-            [(PCA_TOP_K, None, None)],
+        return local_rows(
+            spark, [(PCA_TOP_K, None, None)],
             "top_k long, recon_nonneg boolean, "
             "capture_matches_spectrum boolean")
     mdots = [sum(m * v for m, v in zip(means, c)) for c in comps]

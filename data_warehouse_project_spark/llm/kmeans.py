@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..cache import pin
 from ..registry import register
-from ..sources.catalog import Catalog
+from ..sources.catalog import Catalog, local_rows
 
 #: cluster count (also the init prefix length)
 KM_K = 8
@@ -106,8 +106,8 @@ def kmeans_pinned_report(emb: DataFrame, k: int = KM_K,
         # empty corpus (a filtered source can match nothing): no
         # seeds, no clusters — an empty report, not an IndexError
         # (round-9 empty-input sweep)
-        return emb.sparkSession.createDataFrame(
-            [], "cluster int, n_members long, wcss_q long, "
+        return local_rows(
+            emb.sparkSession, [], "cluster int, n_members long, wcss_q long, "
                 "centroid_sq_norm long")
     dim = len(cents[0])
     for _ in range(iters):

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import cache
 from ..functions.compat import fround, sql_fround
 from ..registry import register
-from ..sources.catalog import Catalog
+from ..sources.catalog import Catalog, local_rows
 
 DIM = 64
 QUERY_VEC_ID = 0
@@ -694,15 +694,16 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # path action-free and only pay the emptiness check in the
         # error path (round-9 empty-input sweep)
         if vecs.isEmpty():
-            return spark.createDataFrame(
-                [], "vec_id long, label int, cos_sim double")
+            return local_rows(
+                spark, [], "vec_id long, label int, cos_sim double")
         raise
     assigned = model.transform(vecs).withColumnRenamed("prediction", "cell")
 
     # query vector + its nprobe nearest centroids
     centroids = [(i, [float(x) for x in c])
                  for i, c in enumerate(model.clusterCenters())]
-    cent_df = spark.createDataFrame(centroids, "cell int, centroid array<double>")
+    cent_df = local_rows(spark, centroids,
+                         "cell int, centroid array<double>")
     query = (assigned.filter(F.col("vec_id") == QUERY_VEC_ID)
              .select(F.col("embedding").alias("qe")))
     probe_cells = (
@@ -780,8 +781,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                        featuresCol="features").fit(unit)
     except Exception:
         if unit.isEmpty():     # see ann_ivf_cosine's guard
-            return spark.createDataFrame(
-                [], "vec_a long, vec_b long, cos_sim double")
+            return local_rows(
+                spark, [], "vec_a long, vec_b long, cos_sim double")
         raise
     cells = (model.transform(unit)
              .select("vec_id", F.lit(0).alias("band"),

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.compat import fround, sql_fround
 from ..registry import register
-from ..sources.catalog import Catalog
+from ..sources.catalog import Catalog, local_rows
 from .asof import asof_join
 from .windows import latest_per_group
 
@@ -67,7 +67,8 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     first (bin = floor(price/width)) to avoid the NL explosion.
     """
     cat = Catalog(spark, sf_dir)
-    bands = spark.createDataFrame(
+    bands = local_rows(
+        spark,
         [("budget", 0.0, 100_000.0),
          ("mid", 100_000.0, 250_000.0),
          ("premium", 250_000.0, 1e18)],

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import fround, sql_fround
 from ..registry import register
-from ..sources.catalog import Catalog
+from ..sources.catalog import Catalog, local_rows
 
 #: trailing attribution window (seconds)
 LOOKBACK_S = 72 * 3600
@@ -386,7 +386,7 @@ def events_markov_attribution(spark: SparkSession,
         StructField("removal_effect_q", LongType()),
         StructField("attribution_share", DoubleType()),
     ])
-    return (spark.createDataFrame(markov_solve(trans), schema)
+    return (local_rows(spark, markov_solve(trans), schema)
             .orderBy("channel"))
 
 

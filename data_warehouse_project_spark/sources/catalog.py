@@ -15,9 +15,11 @@ and partition pruning composes for free.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType, TimestampType
 
 from .. import schemas
 from ..session import tune
@@ -111,6 +113,56 @@ def load_table_jdbc(spark: SparkSession, name: str, **kw) -> DataFrame:
         raise ValueError(
             f"JDBC table {name!r} missing expected columns {sorted(missing)}")
     return df.select(*expected)
+
+
+def local_rows(spark: SparkSession, rows,
+               schema: StructType | str) -> DataFrame:
+    """Driver-built rows (tuples or dicts) as a JVM-side ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` is a Python RDD: each
+    evaluation runs one Python-worker task per partition, 4 on
+    ``local[4]``. On a 4-vCPU host each such task cost about 0.23
+    CPU-s, because PySpark's worker calls ``importlib.invalidate_caches()``
+    per task and zipimport then re-reads the ``pyspark.zip`` directory;
+    a 16-row collect measured 1 job and 0.94 CPU-s that way, against
+    0 jobs and 0.05 CPU-s for this frame, which plans as a
+    ``LocalTableScan``.
+
+    The rows travel by Arrow (on in ``session.RUNTIME_CONFS``). Columns
+    stay Python objects (an int column with a NULL would otherwise go
+    through float64 and round past 2**53), and naive datetimes in
+    top-level ``timestamp`` columns are read as local time, as
+    ``collect()`` returns them and ``createDataFrame(list)`` reads
+    them. An empty ``rows`` builds the empty relation in the JVM,
+    since PySpark plans an empty pandas frame as a Python RDD. Rows
+    Arrow cannot convert raise instead of falling back to the Python
+    RDD."""
+    import pandas as pd
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not rows:
+        jspark = spark._jsparkSession
+        return DataFrame(jspark.createDataFrame(
+            spark._jvm.java.util.ArrayList(),
+            jspark.parseDataType(schema.json())), spark)
+    tune(spark)
+    pdf = pd.DataFrame(rows, columns=schema.names, dtype=object)
+    for f in schema.fields:
+        if isinstance(f.dataType, TimestampType):
+            pdf[f.name] = pd.Series(
+                [v.astimezone(dt.timezone.utc)
+                 if isinstance(v, dt.datetime) else v for v in pdf[f.name]],
+                index=pdf.index, dtype=object)
+    df = spark.createDataFrame(pdf, schema)
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        raise TypeError(
+            "local_rows: Arrow could not convert the rows to "
+            f"{schema.simpleString()} (planned {plan.nodeName()}; the "
+            "warning above names the failing column)")
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table as a DataFrame with its canonical schema.

@@ -59,7 +59,8 @@ from ..functions.compat import fround
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_CLICK_PURCHASE_SQL
-from .state_fold import fold_batch, run_maintainer
+from .state_fold import (fold_batch, run_maintainer, watermark_prologue,
+                         watermark_row)
 
 #: join window (seconds): purchase in [click_ts, click_ts + WINDOW]
 WINDOW_S = 3600
@@ -97,44 +98,16 @@ def _match(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
 
 def _assemble(matches: DataFrame, buf_c: DataFrame, buf_p: DataFrame,
               wm_ts, dropped: int, spark: SparkSession) -> DataFrame:
-    ts_type = matches.schema["click_ts"].dataType
-
-    def _buf(b: DataFrame, kind: str) -> DataFrame:
-        return b.select(
-            F.lit(kind).alias("kind"),
-            "user_id",
-            F.lit(None).cast("long").alias("click_id"),
-            F.lit(None).cast("long").alias("purchase_id"),
-            F.lit(None).cast(ts_type).alias("click_ts"),
-            F.lit(None).cast(ts_type).alias("purchase_ts"),
-            F.lit(None).cast("double").alias("purchase_value"),
-            "event_id", "ts", "value",
-            F.lit(None).cast(ts_type).alias("wm"),
-            F.lit(None).cast("long").alias("dropped"))
-
     m = matches.select(
         F.lit("m").alias("kind"), "user_id", "click_id", "purchase_id",
-        "click_ts", "purchase_ts", "purchase_value",
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    w = spark.createDataFrame([("w",)], "kind string").select(
-        "kind",
-        F.lit(None).cast("long").alias("user_id"),
-        F.lit(None).cast("long").alias("click_id"),
-        F.lit(None).cast("long").alias("purchase_id"),
-        F.lit(None).cast(ts_type).alias("click_ts"),
-        F.lit(None).cast(ts_type).alias("purchase_ts"),
-        F.lit(None).cast("double").alias("purchase_value"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit(wm_ts).cast(ts_type).alias("wm"),
-        F.lit(dropped).cast("long").alias("dropped"))
-    return (m.unionByName(_buf(buf_c, "c")).unionByName(_buf(buf_p, "p"))
-            .unionByName(w))
+        "click_ts", "purchase_ts", "purchase_value")
+    c, p = (b.select(F.lit(kind).alias("kind"), "user_id", "event_id",
+                     "ts", "value")
+            for b, kind in ((buf_c, "c"), (buf_p, "p")))
+    w = watermark_row(spark, matches.schema["click_ts"].dataType, wm_ts,
+                      dropped)
+    return (m.unionByName(c.unionByName(p), allowMissingColumns=True)
+            .unionByName(w, allowMissingColumns=True))
 
 
 def _evict(buf_c: DataFrame, buf_p: DataFrame, horizon):
@@ -170,7 +143,6 @@ def merge_interval_join_state(prev: DataFrame,
     """Fold one arbitrarily-ordered batch: admit strictly above the
     previous horizon (drop-and-count the rest), join admitted against
     buffer ∪ admitted, append matches, re-buffer with eviction."""
-    from .state_fold import watermark_prologue
     spark = prev.sparkSession
     ev = _sides(batch_events)
     _, dropped, wm_new, horizon_new, admitted, n_late = \

@@ -60,7 +60,8 @@ from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import (EVENTS_SESSIONIZE_SQL, SESSION_GAP_S,
                            session_islands)
-from .state_fold import fold_batch, run_maintainer
+from .state_fold import (fold_batch, run_maintainer, watermark_prologue,
+                         watermark_row)
 
 #: allowed event-time lateness (seconds) — late_transitions.py's knob
 LATENESS_S = 6 * 3600
@@ -104,39 +105,14 @@ def _split_final(rows: DataFrame, horizon):
 
 def _assemble(final: DataFrame, buffer: DataFrame, wm_ts, dropped: int,
               spark: SparkSession) -> DataFrame:
-    ts_type = buffer.schema["ts"].dataType
     s = final.select(
         F.lit("s").alias("kind"), "user_id", "session_seq",
-        "session_start", "session_end", "n_events", "value_q",
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("long").alias("vq"),
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    b = buffer.select(
-        F.lit("b").alias("kind"), "user_id",
-        F.lit(None).cast("long").alias("session_seq"),
-        F.lit(None).cast(ts_type).alias("session_start"),
-        F.lit(None).cast(ts_type).alias("session_end"),
-        F.lit(None).cast("long").alias("n_events"),
-        F.lit(None).cast("long").alias("value_q"),
-        "event_id", "ts", "vq",
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    w = spark.createDataFrame([("w",)], "kind string").select(
-        "kind",
-        F.lit(None).cast("long").alias("user_id"),
-        F.lit(None).cast("long").alias("session_seq"),
-        F.lit(None).cast(ts_type).alias("session_start"),
-        F.lit(None).cast(ts_type).alias("session_end"),
-        F.lit(None).cast("long").alias("n_events"),
-        F.lit(None).cast("long").alias("value_q"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("long").alias("vq"),
-        F.lit(wm_ts).cast(ts_type).alias("wm"),
-        F.lit(dropped).cast("long").alias("dropped"))
-    return s.unionByName(b).unionByName(w)
+        "session_start", "session_end", "n_events", "value_q")
+    b = buffer.select(F.lit("b").alias("kind"), "user_id", "event_id",
+                      "ts", "vq")
+    w = watermark_row(spark, buffer.schema["ts"].dataType, wm_ts, dropped)
+    return (s.unionByName(b, allowMissingColumns=True)
+            .unionByName(w, allowMissingColumns=True))
 
 
 def _number_finals(final: DataFrame, base: DataFrame | None) -> DataFrame:
@@ -179,7 +155,6 @@ def merge_late_sessions_state(prev: DataFrame,
     admission is strictly above the previous horizon — the shared
     state_fold.watermark_prologue holds the one copy of that
     correctness argument)."""
-    from .state_fold import watermark_prologue
     spark = prev.sparkSession
     ev = _event_rows(batch_events)
     _, dropped, wm_new, horizon_new, admitted, n_late = \

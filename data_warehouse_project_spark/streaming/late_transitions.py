@@ -47,11 +47,13 @@ batch) yields both the finalized pairs and the new buffer, and the
 write's count and buffer branches share its exchange; one (type ×
 type) aggregate sums the prior counts with the new pairs. The buffer
 holds only the lateness window plus one anchor per user, so a fold
-reads O(buffer + batch) rows and history is never rescanned. Serving
-is one window over the buffer, one aggregate over counts ∪ tail pairs,
-and the share's total as a window over that small aggregate. On
-tests/test_streaming.py's budget input, a merge fold runs 9 Spark jobs
-(3 of them in the state write) and a served report 4.
+reads O(buffer + batch) rows and history is never rescanned. The 'w'
+row is a JVM-side local relation (state_fold.watermark_row), so the
+state write runs no Python worker. Serving is one window over the
+buffer, one aggregate over counts ∪ tail pairs, and the share's total
+as a window over that small aggregate. On tests/test_streaming.py's
+budget input, a merge fold runs 9 Spark jobs (3 of them in the state
+write) and a served report 4.
 """
 
 from __future__ import annotations
@@ -61,7 +63,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_TRANSITIONS_SQL, TRANSITION_TOP_K
-from .state_fold import fold_batch, run_maintainer
+from .state_fold import (fold_batch, run_maintainer, watermark_prologue,
+                         watermark_row)
 
 #: allowed event-time lateness (seconds): events arriving more than
 #: this far below the watermark are dropped-and-counted, matching
@@ -79,36 +82,15 @@ def _empty_like(kind_rows: DataFrame) -> DataFrame:
 
 def _assemble(counts: DataFrame, buffer: DataFrame,
               wm_ts, dropped: int, spark: SparkSession) -> DataFrame:
-    """Union the three row kinds into the single state schema."""
-    ts_type = buffer.schema["ts"].dataType
-    c = counts.select(
-        F.lit("c").alias("kind"), "prev_type", "next_type", "n",
-        F.lit(None).cast("long").alias("user_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast("string").alias("event_type"),
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    b = buffer.select(
-        F.lit("b").alias("kind"),
-        F.lit(None).cast("string").alias("prev_type"),
-        F.lit(None).cast("string").alias("next_type"),
-        F.lit(None).cast("long").alias("n"),
-        "user_id", "ts", "event_id", "event_type",
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    w = spark.createDataFrame([("w",)], "kind string").select(
-        "kind",
-        F.lit(None).cast("string").alias("prev_type"),
-        F.lit(None).cast("string").alias("next_type"),
-        F.lit(None).cast("long").alias("n"),
-        F.lit(None).cast("long").alias("user_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast("string").alias("event_type"),
-        F.lit(wm_ts).cast(ts_type).alias("wm"),
-        F.lit(dropped).cast("long").alias("dropped"))
-    return c.unionByName(b).unionByName(w)
+    """Union the three row kinds into the single state schema; each
+    kind's missing columns are NULL."""
+    c = counts.select(F.lit("c").alias("kind"), "prev_type", "next_type",
+                      "n")
+    b = buffer.select(F.lit("b").alias("kind"), "user_id", "ts",
+                      "event_id", "event_type")
+    w = watermark_row(spark, buffer.schema["ts"].dataType, wm_ts, dropped)
+    return (c.unionByName(b, allowMissingColumns=True)
+            .unionByName(w, allowMissingColumns=True))
 
 
 def _pairs(seq: DataFrame) -> DataFrame:
@@ -174,7 +156,6 @@ def merge_late_transitions_state(prev: DataFrame,
     """Fold one arbitrarily-ordered batch: admit events strictly
     above the PREVIOUS horizon (drop-and-count the rest), advance the
     watermark, finalize newly-below-horizon pairs, re-buffer."""
-    from .state_fold import watermark_prologue
     spark = prev.sparkSession
     ev = _events_cols(batch_events)
     _, dropped, wm_new, horizon_new, admitted, n_late = \

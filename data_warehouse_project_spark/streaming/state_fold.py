@@ -24,8 +24,10 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DataType
 
+from ..sources.catalog import local_rows
 from ..writes import overwrite_table
 
 #: sentinel column carried on every state row (see module docstring)
@@ -70,6 +72,17 @@ def run_maintainer(events_stream: DataFrame, state_path: str,
     )
     q.awaitTermination()
     return q
+
+
+def watermark_row(spark: SparkSession, ts_type: DataType, wm,
+                  dropped: int) -> DataFrame:
+    """The watermark maintainers' one ``(kind='w', wm, dropped)`` state
+    row, JVM-side (sources.catalog.local_rows). Each maintainer unions
+    it after its other row kinds with ``allowMissingColumns``, so its
+    columns come last and the rest are NULL."""
+    return local_rows(spark, [("w", wm, dropped)],
+                      f"kind string, wm {ts_type.simpleString()}, "
+                      "dropped long")
 
 
 def watermark_prologue(prev: DataFrame, ev: DataFrame, lateness_s: int):

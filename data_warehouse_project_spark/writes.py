@@ -33,6 +33,9 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from .cache import pin
+from .sources.catalog import local_rows
+
 
 def append_rows(df: DataFrame, path: str) -> None:
     """INSERT-sink: append a batch to a parquet table (S7-S11)."""
@@ -113,8 +116,8 @@ def with_surrogate_keys_bulk(
     for r in sorted(counts, key=lambda r: r["__pid"]):
         offsets.append((r["__pid"], acc))
         acc += r["__cnt"]
-    spark = new_rows.sparkSession
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
+    off_df = local_rows(new_rows.sparkSession, offsets,
+                        "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(*[F.col(c) for c in order_cols])
     return (
         part.join(F.broadcast(off_df), "__pid")
@@ -165,10 +168,16 @@ def record_payment(
     the keyed payment batch — no driver round-trip, so a warehouse-
     sized payment batch flips statuses entirely executor-side
     (VERDICT r9 "what's wrong" #2; the old form collected the ids
-    into an `isin` literal)."""
-    keyed = with_surrogate_keys(
+    into an `isin` literal).
+
+    The keyed batch is evaluated once: it is pinned (cache.pin), the
+    first of the two table writes fills the cache, the status flip
+    reads it, and the host's next ``cache.release_all()`` drops it. A
+    Python-backed ``payment_row`` therefore runs its Python workers
+    once, not once per written table."""
+    keyed = pin(with_surrogate_keys(
         payment_row, "payment_id", existing=payments,
-        order_by=["registration_id", "payment_date"])
+        order_by=["registration_id", "payment_date"]))
     new_payments = payments.unionByName(keyed)
     paid = keyed.select("registration_id").distinct()
     new_regs = (

@@ -78,3 +78,20 @@ def minhash_replay(spark, docs):
         if jac >= D.JACCARD_THRESHOLD:
             pairs.append((a, b, jac))
     return sh, sig, pairs
+
+
+def python_rdd_scans(df) -> list[str]:
+    """Names of the RDD-scan leaves of ``df``'s physical plan whose
+    lineage runs a ``PythonRDD`` (a ``createDataFrame(<python list>)``
+    frame: one Python-worker task per partition on every evaluation).
+    The plan string cannot tell these from a ``localCheckpoint``, whose
+    leaf is the same ``Scan ExistingRDD``; the RDD lineage can. Reads
+    the plan only: no job runs."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if (leaf.getClass().getSimpleName() == "RDDScanExec"
+                and "PythonRDD" in leaf.rdd().toDebugString()):
+            out.append(leaf.nodeName())
+    return out

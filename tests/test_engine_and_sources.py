@@ -162,6 +162,72 @@ def test_cache_release_frees_all_storage(spark, sf_dir):
         assert n_cached() == 0         # and fully released
 
 
+#: every column type the engine builds driver-side rows of
+LOCAL_ROWS_SCHEMA = ("s string, i int, l long, d double, t timestamp, "
+                     "tn timestamp_ntz, a array<double>, b boolean")
+
+
+def test_local_rows_matches_create_dataframe(spark):
+    """sources.catalog.local_rows returns createDataFrame(list)'s rows
+    and schema (quotes, backslashes, a long past 2**53 beside a NULL,
+    both timestamp kinds, arrays with NULL elements, all-NULL rows, the
+    empty list, dict rows), plans a LocalTableScan and has no PythonRDD
+    in its lineage, where the list path has one."""
+    import datetime as dt
+
+    from data_warehouse_project_spark.sources.catalog import local_rows
+    from tests.helpers import python_rdd_scans
+
+    rows = [("a'b\\c\"", 1, 2 ** 62 + 1, 1.5,
+             dt.datetime(2024, 1, 2, 3, 4, 5, 6),
+             dt.datetime(2024, 1, 2, 3, 4, 5, 7), [1.0, None, -2.5], True),
+            (None,) * 8]
+    for given in (rows, []):
+        got = local_rows(spark, given, LOCAL_ROWS_SCHEMA)
+        want = spark.createDataFrame(given, LOCAL_ROWS_SCHEMA)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert python_rdd_scans(got) == []
+        assert python_rdd_scans(want)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+    names = [f.name for f in want.schema.fields]
+    as_dicts = local_rows(spark, [dict(zip(names, r)) for r in rows],
+                          LOCAL_ROWS_SCHEMA)
+    assert as_dicts.collect() == spark.createDataFrame(
+        rows, LOCAL_ROWS_SCHEMA).collect()
+
+
+def test_local_rows_raises_when_arrow_cannot_convert(spark):
+    """Rows Arrow cannot convert raise; PySpark's own fallback would
+    silently rebuild them as a Python RDD."""
+    from data_warehouse_project_spark.sources.catalog import local_rows
+
+    with pytest.warns(UserWarning), pytest.raises(TypeError,
+                                                  match="local_rows"):
+        local_rows(spark, [(5,)], "s string")
+
+
+def test_cache_release_all_counts_pins_and_logs_checkpoint_refs(
+        spark, caplog):
+    """release_all returns the number of pins it unpersisted and logs
+    that count beside the number of checkpoint refs it dropped."""
+    import logging
+
+    from data_warehouse_project_spark import cache
+
+    cache.release_all()
+    cache.pin(spark.range(3))
+    cache.track_ckpt(spark.range(2))
+    cache.track_ckpt(spark.range(1))
+    with caplog.at_level(logging.INFO, logger=cache.__name__):
+        assert cache.release_all() == 1
+    assert [r.getMessage() for r in caplog.records
+            if r.name == cache.__name__] == [
+        "cache.release_all: unpersisted 1 pin(s), dropped 2 "
+        "checkpoint ref(s)"]
+
+
 def test_tune_warns_naming_each_conf_it_cannot_set(spark, monkeypatch,
                                                    caplog):
     """session.tune skips a conf the session refuses (a static conf

@@ -374,18 +374,31 @@ ARROW_JUSTIFIED = {
 }
 
 
+#: the ONLY queries allowed a Python-backed relation (an RDD scan
+#: whose lineage runs a PythonRDD, i.e. a createDataFrame(<python
+#: list>) frame: Python-worker tasks on every evaluation). Driver-built
+#: rows go through sources.catalog.local_rows instead, so this is empty
+PYTHON_RDD_JUSTIFIED: set[str] = set()
+
+
 def test_registry_wide_plan_hygiene(spark, sf_dir):
     """EVERY registered query — current and future — must be free of
-    row-at-a-time Python (BatchEvalPython) and cartesian products,
-    and may carry Arrow-vectorized Python only if it is on the
-    documented justified list. A new query that silently introduces a
-    Python hot path or an accidental cross join fails here without
-    needing a per-family fixture."""
+    row-at-a-time Python (BatchEvalPython), Python-backed relations
+    and cartesian products, and may carry Arrow-vectorized Python or a
+    Python-backed relation only if it is on the documented justified
+    list. A new query that silently introduces a Python hot path or an
+    accidental cross join fails here without needing a per-family
+    fixture."""
+    from tests.helpers import python_rdd_scans
+
     offenders = []
     for name, fn in registry.queries().items():
-        plan = _plan(fn(spark, sf_dir))
+        df = fn(spark, sf_dir)
+        plan = _plan(df)
         if "BatchEvalPython" in plan:
             offenders.append((name, "BatchEvalPython"))
+        if python_rdd_scans(df) and name not in PYTHON_RDD_JUSTIFIED:
+            offenders.append((name, "Python-backed relation"))
         if "CartesianProduct" in plan:
             offenders.append((name, "CartesianProduct"))
         if "ArrowEvalPython" in plan and name not in ARROW_JUSTIFIED:

@@ -2018,6 +2018,66 @@ def test_late_fold_driver_action_budget(spark, tmp_path, monkeypatch):
                     for r in rows} == {("a", "b"): 1, ("b", "c"): 1}
 
 
+#: the watermark maintainers' state tables as (name, type) in column
+#: order; a state table written by an earlier version must stay readable
+_WM_TAIL = [("wm", "timestamp_ntz"), ("dropped", "bigint"),
+            ("last_batch_id", "int")]
+WATERMARK_STATE_DTYPES = {
+    "late_transitions": [
+        ("kind", "string"), ("prev_type", "string"),
+        ("next_type", "string"), ("n", "bigint"), ("user_id", "bigint"),
+        ("ts", "timestamp_ntz"), ("event_id", "bigint"),
+        ("event_type", "string")] + _WM_TAIL,
+    "late_sessions": [
+        ("kind", "string"), ("user_id", "bigint"),
+        ("session_seq", "bigint"), ("session_start", "timestamp_ntz"),
+        ("session_end", "timestamp_ntz"), ("n_events", "bigint"),
+        ("value_q", "bigint"), ("event_id", "bigint"),
+        ("ts", "timestamp_ntz"), ("vq", "bigint")] + _WM_TAIL,
+    "interval_join": [
+        ("kind", "string"), ("user_id", "bigint"), ("click_id", "bigint"),
+        ("purchase_id", "bigint"), ("click_ts", "timestamp_ntz"),
+        ("purchase_ts", "timestamp_ntz"), ("purchase_value", "double"),
+        ("event_id", "bigint"), ("ts", "timestamp_ntz"),
+        ("value", "double")] + _WM_TAIL,
+}
+
+
+def test_watermark_folds_write_no_python_and_keep_state_schema(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """For late_transitions, late_sessions and interval_join, the
+    frame an init fold and a merge fold hand to the state write has no
+    PythonRDD in its lineage (the 'w' row is a JVM local relation),
+    and the written state keeps its column names, order and types."""
+    from data_warehouse_project_spark.sources.catalog import Catalog
+    from data_warehouse_project_spark.streaming import (
+        interval_join, late_sessions, late_transitions, state_fold)
+    from tests.helpers import python_rdd_scans
+
+    written = []
+    real_write = state_fold.overwrite_table
+
+    def recording_write(spark_, df, path):
+        written.append(df)
+        real_write(spark_, df, path)
+
+    monkeypatch.setattr(state_fold, "overwrite_table", recording_write)
+    ev = Catalog(spark, sf_dir).events
+    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
+    mid = lo + (hi - lo) / 2
+    batches = [ev.filter(F.col("ts") <= F.lit(mid)),
+               ev.filter(F.col("ts") > F.lit(mid))]
+    for mod in (late_transitions, late_sessions, interval_join):
+        name = mod.__name__.rsplit(".", 1)[-1]
+        path = str(tmp_path / name)
+        for batch_id, batch in enumerate(batches):
+            written.clear()
+            assert mod.fold_batch_into_state(batch, batch_id, path)
+            assert python_rdd_scans(written[0]) == [], (name, batch_id)
+            assert (spark.read.parquet(path).dtypes
+                    == WATERMARK_STATE_DTYPES[name]), (name, batch_id)
+
+
 # ---------------------------------------------------------------------------
 # Interval join over random ts-ordered splits vs brute-force pairing
 # ---------------------------------------------------------------------------
